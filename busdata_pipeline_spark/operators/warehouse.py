@@ -22,15 +22,28 @@ side when small; the existing dim scan only reads the trip_id column.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from busdata_pipeline_spark.schemas import TRIP
+from busdata_pipeline_spark.schemas import (
+    BREADCRUMB,
+    RAW_BREADCRUMB_DECODED,
+    TRIP,
+)
 
 FACT = "breadcrumb"
 DIM = "trip"
 STAGE = "breadcrumb_stage"
+
+#: The fact table as written: BREADCRUMB plus its event_date partition
+#: column.  Reads the engine owns pass it so no footer-inference job runs.
+_FACT_READ = T.StructType(
+    BREADCRUMB.fields + [T.StructField("event_date", T.DateType())]
+)
 
 
 def _fact_path(warehouse: str) -> str:
@@ -218,9 +231,12 @@ def stage_raw_batch(raw: DataFrame, warehouse: str, batch_id: int) -> None:
 
 
 def promote_stage(spark: SparkSession, warehouse: str) -> int:
-    """Day-close transform: enrich ALL staged raw rows (full-day window
-    context, same lineage as ``load_day``) and dynamic-overwrite the
-    touched event-date partitions of the fact table.
+    """Day-close transform: ``load_day`` over ALL staged raw rows, so the
+    fact enrichment sees full-day window context and the trip dim takes
+    each trip's earliest staged ping, exactly as the batch job does.  It
+    dynamic-overwrites the touched event-date partitions of the fact
+    table and upsert-ignores the trips into the dim; dim rows therefore
+    appear at promote, together with the fact rows they describe.
 
     The stage is NOT deleted — promote is a pure function of the staged
     raw, so re-running it (crash-retry, or after more batches landed) is
@@ -230,18 +246,21 @@ def promote_stage(spark: SparkSession, warehouse: str) -> int:
     reclaims closed days once the retention boundary passes them.
     Returns the number of staged raw rows promoted.
     """
-    from busdata_pipeline_spark.operators.enrich import enrich_breadcrumbs
-
     stage = _stage_path(warehouse)
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(stage)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(hpath):
         return 0
-    staged = spark.read.option("basePath", stage).parquet(stage).drop("ingest_batch")
+    staged = (
+        spark.read.schema(RAW_BREADCRUMB_DECODED)
+        .option("basePath", stage)
+        .parquet(stage)
+        .drop("ingest_batch")
+    )
     n = staged.count()
     if n:
-        write_fact_idempotent(enrich_breadcrumbs(staged), warehouse)
+        load_day(staged, warehouse)
     return n
 
 
@@ -313,7 +332,8 @@ def audit_day_count(spark: SparkSession, warehouse: str, day: str) -> int:
     """A11 — post-load verification count for one service day; the
     event_date filter prunes to a single partition directory."""
     return (
-        read_fact(spark, warehouse)
+        spark.read.schema(_FACT_READ)
+        .parquet(_fact_path(warehouse))
         .where(F.col("event_date") == F.lit(day).cast("date"))
         .count()
     )
@@ -321,14 +341,25 @@ def audit_day_count(spark: SparkSession, warehouse: str, day: str) -> int:
 
 def load_day(raw: DataFrame, warehouse: str) -> None:
     """The reference's whole per-day job (transform.py:86-312): enrich,
-    upsert dim, overwrite the day's fact partitions."""
+    upsert dim, overwrite the day's fact partitions.
+
+    The dim upsert and the fact write touch different directories and
+    each ends in a single-task tail, so the upsert runs on a worker
+    thread while the fact write runs on this one.  The worker inherits
+    this thread's Spark local properties (job group, description) and
+    job tags, and its error re-raises here after the fact write returns."""
     from busdata_pipeline_spark.operators.enrich import (
         enrich_breadcrumbs,
         trip_dimension,
     )
 
-    upsert_trip_ignore(trip_dimension(raw), warehouse)
-    write_fact_idempotent(enrich_breadcrumbs(raw), warehouse)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        upsert = inheritable_thread_target(raw.sparkSession)(upsert_trip_ignore)
+        dim = pool.submit(upsert, trip_dimension(raw), warehouse)
+        try:
+            write_fact_idempotent(enrich_breadcrumbs(raw), warehouse)
+        finally:
+            dim.result()
 
 
 def merge_into(target: DataFrame, source: DataFrame, key: str,

@@ -26,6 +26,13 @@ RAW_BREADCRUMB = T.StructType([
     T.StructField("_corrupt_record", T.StringType()),
 ])
 
+#: A decoded raw breadcrumb: RAW_BREADCRUMB without ``_corrupt_record``.
+#: DROPMALFORMED file reads, the stream source, Kafka ``from_json``, the
+#: collector's fetch stage and the warehouse stage all carry this shape.
+RAW_BREADCRUMB_DECODED = T.StructType(
+    [f for f in RAW_BREADCRUMB.fields if f.name != "_corrupt_record"]
+)
+
 #: Trip dimension (transform.py:190-194) — PK trip_id.
 TRIP = T.StructType([
     T.StructField("trip_id", T.LongType(), nullable=False),

@@ -27,16 +27,9 @@ from collections.abc import Callable, Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from busdata_pipeline_spark.functions.timestamps import opd_date
-from busdata_pipeline_spark.schemas import RAW_BREADCRUMB
-
-#: Record-batch schema produced by the fetch stage: every raw breadcrumb
-#: field plus the vehicle id the fetch was keyed on.
-FETCHED = T.StructType(
-    [f for f in RAW_BREADCRUMB.fields if f.name != "_corrupt_record"]
-)
+from busdata_pipeline_spark.schemas import RAW_BREADCRUMB_DECODED
 
 #: fetcher(vehicle_id) -> iterable of breadcrumb dicts (the per-vehicle
 #: JSON array of data_collector.py:60-63).
@@ -93,7 +86,7 @@ def fetch_breadcrumbs(ids: DataFrame, fetcher: Fetcher,
     yield no rows, matching the reference's skip-on-error
     (data_collector.py:64-66).
     """
-    cols = [f.name for f in FETCHED.fields]
+    cols = [f.name for f in RAW_BREADCRUMB_DECODED.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -106,7 +99,9 @@ def fetch_breadcrumbs(ids: DataFrame, fetcher: Fetcher,
                     out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return ids.repartition(parallelism).mapInPandas(run, schema=FETCHED)
+    return ids.repartition(parallelism).mapInPandas(
+        run, schema=RAW_BREADCRUMB_DECODED
+    )
 
 
 def write_bronze(df: DataFrame, path: str) -> None:

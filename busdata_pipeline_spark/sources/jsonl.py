@@ -11,19 +11,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from busdata_pipeline_spark.schemas import RAW_BREADCRUMB
+from busdata_pipeline_spark.schemas import RAW_BREADCRUMB_DECODED
 
 
 def read_breadcrumb_jsonl(spark: SparkSession, path: str) -> DataFrame:
     """Hot-path read: undecodable lines are dropped at the scan
     (DROPMALFORMED == the reference's skip-with-warning), so no corrupt
     column survives into downstream plans."""
-    schema = T.StructType([f for f in RAW_BREADCRUMB.fields
-                           if f.name != "_corrupt_record"])
     return (
-        spark.read.schema(schema)
+        spark.read.schema(RAW_BREADCRUMB_DECODED)
         .option("mode", "DROPMALFORMED")
         .json(path)
     )

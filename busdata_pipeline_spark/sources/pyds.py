@@ -29,7 +29,7 @@ from pyspark.sql.datasource import (
 )
 
 #: DDL of the produced rows — the raw breadcrumb fields keyed by vehicle
-#: (matches collector.FETCHED field-for-field).
+#: (the fields of schemas.RAW_BREADCRUMB_DECODED).
 BREADCRUMB_DDL = (
     "EVENT_NO_TRIP bigint, EVENT_NO_STOP bigint, OPD_DATE string, "
     "METERS double, ACT_TIME bigint, GPS_LATITUDE double, "

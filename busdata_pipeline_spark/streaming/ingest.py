@@ -18,33 +18,34 @@ Mapping (reference -> here):
 - ack/redelivery at-least-once (:89,98, T4)            -> checkpointed source
   offsets + idempotent sink (S11) = exactly-once end to end
 - shutdown -> transform.main(date) handoff (:122-143, T5) -> foreachBatch
-  running the SAME batch enrichment (operators/enrich.py) per micro-batch;
-  Trigger.AvailableNow replays a backlog then stops.
+  sinks.  Live (incremental) micro-batches only stage their raw rows,
+  as the subscriber only appends to the day file; ``promote_stage`` is
+  the day-close transform and runs the SAME ``load_day`` as the batch
+  job (enrich -> fact, first ping -> trip dim) over the whole staged
+  day.  Trigger.AvailableNow replays a backlog then stops.
 
-At scale: the stream never aggregates unbounded state here — enrichment
-is per-trip windowing INSIDE a micro-batch (trips don't span batches in
-the reference's day-file model), so state stores stay empty and
-throughput is the batch engine's.
+At scale: the stream never aggregates unbounded state here — per-trip
+windowing runs in the batch engine over whole days (at promote, or
+inside the one micro-batch of whole-day replay), so state stores stay
+empty and throughput is the batch engine's.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from busdata_pipeline_spark.functions.timestamps import breadcrumb_timestamp
-from busdata_pipeline_spark.schemas import RAW_BREADCRUMB
-
-RAW_STREAM_SCHEMA = T.StructType(
-    [f for f in RAW_BREADCRUMB.fields if f.name != "_corrupt_record"]
-)
+from busdata_pipeline_spark.schemas import RAW_BREADCRUMB_DECODED
 
 
 def stream_breadcrumbs(spark: SparkSession, drop_dir: str,
                        max_files_per_trigger: int | None = None) -> DataFrame:
     """S5 — streaming source over the subscriber drop directory."""
-    reader = spark.readStream.schema(RAW_STREAM_SCHEMA).option("mode", "DROPMALFORMED")
+    reader = (
+        spark.readStream.schema(RAW_BREADCRUMB_DECODED)
+        .option("mode", "DROPMALFORMED")
+    )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.json(drop_dir)
@@ -81,8 +82,8 @@ def write_bronze(stream: DataFrame, out_dir: str, checkpoint: str,
 def stream_into_warehouse(stream: DataFrame, warehouse: str, checkpoint: str,
                           available_now: bool = True,
                           incremental: bool = False):
-    """T5 — the stream->batch handoff: each micro-batch runs the SAME
-    enrichment lineage as the batch job (one code path, two execution
+    """T5 — the stream->batch handoff: the warehouse is loaded by the
+    SAME ``load_day`` as the batch job (one code path, two execution
     modes), with exactly-once semantics from checkpointed offsets plus
     an idempotent sink (T4).
 
@@ -95,20 +96,19 @@ def stream_into_warehouse(stream: DataFrame, warehouse: str, checkpoint: str,
       batch holding every record of each day.  If a day ever spans two
       batches, the second overwrite erases the first's rows, so this
       mode refuses a live (non-availableNow) trigger.
-    - ``incremental=True`` (live / multi-batch): each batch upserts the
-      dim (anti-join append — naturally replay-idempotent) and lands
+    - ``incremental=True`` (live / multi-batch): each batch only lands
       its RAW rows in a batch-id-keyed staging dir (``stage_raw_batch``);
-      ``promote_stage`` enriches the full day and folds it into the
-      fact table at day close.  A replayed batch overwrites only its
-      own staging dir — no cross-batch data loss — and trips that span
-      micro-batches get exact window semantics because enrichment runs
-      over the whole day, not per batch.
+      ``promote_stage`` runs ``load_day`` over the full staged days at
+      day close, writing the fact and the trip dim.  Neither table
+      changes before promote.  A replayed batch overwrites only its own
+      staging dir — no cross-batch data loss — and trips that span
+      micro-batches get exact window semantics and their earliest ping
+      as dim row, because both are derived from the whole day, not per
+      batch.
     """
-    from busdata_pipeline_spark.operators.enrich import trip_dimension
     from busdata_pipeline_spark.operators.warehouse import (
         load_day,
         stage_raw_batch,
-        upsert_trip_ignore,
     )
 
     if not incremental and not available_now:
@@ -126,7 +126,6 @@ def stream_into_warehouse(stream: DataFrame, warehouse: str, checkpoint: str,
     def handle_incremental(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        upsert_trip_ignore(trip_dimension(batch), warehouse)
         stage_raw_batch(batch, warehouse, batch_id)
 
     writer = (

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from busdata_pipeline_spark.streaming.ingest import RAW_STREAM_SCHEMA
+from busdata_pipeline_spark.schemas import RAW_BREADCRUMB_DECODED
 
 
 def kafka_available(spark: SparkSession) -> bool:
@@ -65,11 +65,11 @@ def decode_kafka_breadcrumbs(raw: DataFrame) -> DataFrame:
     decodable message.
     """
     parsed = raw.select(
-        F.from_json(F.col("value").cast("string"), RAW_STREAM_SCHEMA)
+        F.from_json(F.col("value").cast("string"), RAW_BREADCRUMB_DECODED)
         .alias("r")
     )
     any_field = None
-    for f in RAW_STREAM_SCHEMA.fields:
+    for f in RAW_BREADCRUMB_DECODED.fields:
         c = F.col(f"r.{f.name}").isNotNull()
         any_field = c if any_field is None else (any_field | c)
     return (

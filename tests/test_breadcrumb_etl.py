@@ -208,6 +208,102 @@ def test_idempotent_day_load(spark, day_file, tmp_path):
     )
 
 
+def test_load_day_dim_failure_raises_then_reload_is_idempotent(
+        spark, day_file, tmp_path):
+    """The dim upsert runs on a worker thread while the fact write runs
+    on the caller's: a failing upsert must surface from ``load_day``
+    with no thread left behind, and after the cause is removed a re-run
+    lands exactly one copy of every row."""
+    import os
+    import threading
+
+    wh = str(tmp_path / "wh_fail")
+    os.makedirs(wh)
+    blocker = os.path.join(wh, "trip")
+    with open(blocker, "w") as fh:
+        fh.write("not a parquet directory")
+    raw = read_breadcrumb_jsonl(spark, day_file)
+    threads = set(threading.enumerate())
+    with pytest.raises(Exception, match="wh_fail/trip"):
+        load_day(raw, wh)
+    # the executor's worker is a non-daemon thread; none may outlive it
+    assert not [t for t in threading.enumerate()
+                if t not in threads and not t.daemon]
+
+    os.remove(blocker)
+    exp_facts, exp_dims = model(fixture_lines())
+    for _ in range(2):
+        load_day(raw, wh)
+        assert read_fact(spark, wh).count() == len(exp_facts)
+        assert read_dim(spark, wh).count() == len(exp_dims)
+
+
+def _jobs_in_group(spark, group, action):
+    """Run ``action`` under job group ``group``; return the ids of the
+    jobs it ran in that group and of those it ran outside any group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    # Job-start events reach the status store asynchronously; drain the
+    # listener bus before reading it.
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    return (set(tracker.getJobIdsForGroup(group)),
+            set(tracker.getJobIdsForGroup(None)) - ungrouped)
+
+
+def test_breadcrumb_job_counts(spark, day_file, tmp_path):
+    """Pin the day-load's job counts (host-independent, unlike its
+    time).  The counts are read after a warm-up run, so first-load and
+    first-use jobs do not enter them."""
+    import os
+    import shutil
+
+    from busdata_pipeline_spark.streaming.ingest import (
+        stream_breadcrumbs,
+        stream_into_warehouse,
+    )
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    shutil.copy(day_file, drop)
+    wh = str(tmp_path / "wh_jobs")
+    raw = read_breadcrumb_jsonl(spark, day_file)
+    load_day(raw, wh)  # warm-up; the next load also anti-joins the dim
+
+    grouped, ungrouped = _jobs_in_group(spark, "t-load-day",
+                                        lambda: load_day(raw, wh))
+    # The dim upsert runs on a worker thread: its jobs still carry the
+    # caller's group, and none ran outside it.
+    assert 0 < len(grouped) <= 5
+    assert ungrouped == set()
+
+    grouped, _ = _jobs_in_group(
+        spark, "t-audit", lambda: audit_day_count(spark, wh, "2023-01-01"))
+    assert len(grouped) == 2  # count: partial and final aggregate
+
+    # An incremental micro-batch only stages raw rows: isEmpty + write.
+    # Micro-batch jobs run under the query's own group, its run id.
+    sc = spark.sparkContext
+    for run in ("warm", "timed"):
+        q = stream_into_warehouse(
+            stream_breadcrumbs(spark, str(drop), max_files_per_trigger=1),
+            os.path.join(wh, run), str(tmp_path / f"ckpt_{run}"),
+            incremental=True,
+        )
+        assert q.awaitTermination(120)
+    assert sum(1 for p in q.recentProgress if p["numInputRows"]) == 1
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(str(q.runId))) <= 2
+
+
 def test_schema_evolution_merge_read(spark, tmp_path):
     """A column added to the feed mid-history: the evolved day carries
     it, mergeSchema read unions day schemas, and pre-evolution rows

@@ -137,14 +137,14 @@ def test_stream_jdbc_keyed_exactly_once(spark, derby_url, tmp_path):
     ck1 = str(tmp_path / "ck1")
     q = stream_into_jdbc(_stream(spark, d), derby_url, "s_dim",
                          checkpoint=ck1, key="id")
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert read_jdbc(spark, derby_url, "s_dim").count() == 80
 
     # lost checkpoint -> full source redelivery -> still 80 rows
     ck2 = str(tmp_path / "ck2")
     q = stream_into_jdbc(_stream(spark, d), derby_url, "s_dim",
                          checkpoint=ck2, key="id")
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = read_jdbc(spark, derby_url, "s_dim")
     assert got.count() == 80
     assert got.select("id").distinct().count() == 80
@@ -163,7 +163,7 @@ def test_stream_jdbc_append_batch_scoped(spark, derby_url, tmp_path):
     def run():
         q = stream_into_jdbc(_stream(spark, d), derby_url, "s_fact",
                              checkpoint=ck)
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     run()
     assert read_jdbc(spark, derby_url, "s_fact").count() == 30

@@ -73,7 +73,7 @@ def test_stream_offsets_resume_from_checkpoint(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     drain(2)
     first = spark.read.parquet(out).count()

@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from datetime import date
 
 import pytest
 from pyspark.sql import functions as F
@@ -43,7 +44,7 @@ def test_bronze_event_date_routing(spark, drop_dir, tmp_path):
     """T2/S7 — records route to partitions by the RECORD's event date."""
     out, ckpt = str(tmp_path / "bronze"), str(tmp_path / "ckpt1")
     q = write_bronze(stream_breadcrumbs(spark, drop_dir), out, ckpt)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     bronze = spark.read.parquet(out)
     batch = read_breadcrumb_jsonl(spark, drop_dir + "/*.jsonl")
     # every JSON-valid record landed exactly once (the unparseable-date
@@ -64,7 +65,7 @@ def test_stream_warehouse_equals_batch(spark, drop_dir, tmp_path):
     job (same enrichment lineage, different engine)."""
     wh_s, ckpt = str(tmp_path / "wh_stream"), str(tmp_path / "ckpt2")
     q = stream_into_warehouse(stream_breadcrumbs(spark, drop_dir), wh_s, ckpt)
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     from busdata_pipeline_spark.operators.warehouse import load_day
 
@@ -82,7 +83,11 @@ def test_stream_warehouse_equals_batch(spark, drop_dir, tmp_path):
         )
 
     assert canon_fact(wh_s) == canon_fact(wh_b)
-    assert read_dim(spark, wh_s).count() == read_dim(spark, wh_b).count()
+    assert canon_dim(spark, wh_s) == canon_dim(spark, wh_b)
+
+
+def canon_dim(spark, wh):
+    return sorted(map(tuple, read_dim(spark, wh).collect()))
 
 
 def test_stream_windows_equal_batch_windows(spark, tmp_path):
@@ -113,7 +118,7 @@ def test_stream_windows_equal_batch_windows(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {
         (str(r.window_start), r.n_events, r.total_value)
         for r in spark.sql("SELECT * FROM tumbling_stream").collect()
@@ -166,7 +171,7 @@ def test_stream_dedup_drops_redelivered(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.sql(
         "SELECT EVENT_NO_TRIP, ACT_TIME FROM dedup_stream_t"
     ).collect()
@@ -245,7 +250,7 @@ def test_stateful_trip_progress_across_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM trip_progress").collect()
     per_trip = {}
     for r in rows:
@@ -309,7 +314,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = {
         str(r.window_start): r.n_events
         for r in spark.sql("SELECT * FROM late_stream").collect()
@@ -330,18 +335,34 @@ def test_incremental_mode_survives_multibatch_day(spark, drop_dir, tmp_path):
     """Round-2 regression (ADVICE): a day spanning multiple micro-batches
     must not lose the earlier batches' rows.  maxFilesPerTrigger=1 forces
     each drop-dir chunk into its own batch; both chunks carry the same
-    days.  After promote_stage the warehouse equals the batch job's."""
+    days.  After promote_stage the warehouse equals the batch job's, row
+    for row in both tables.  Trip 7001's earliest ping, on another
+    vehicle, arrives in the SECOND batch: its dim row must still come
+    from that ping, as in the batch load."""
     from busdata_pipeline_spark.operators.warehouse import (
         load_day,
         promote_stage,
     )
+    from tests.test_breadcrumb_etl import rec
+
+    day = date(2023, 1, 3)
+    chunks = [os.path.join(drop_dir, f"chunk_{i}.jsonl") for i in (0, 1)]
+    planted = [
+        [rec(7001, 3001, day, 50000, 900), rec(7001, 3001, day, 50060, 1200)],
+        [rec(7001, 3002, day, 49900, 600)],
+    ]
+    now = time.time()
+    for path, rows, age in zip(chunks, planted, (600, 0)):
+        with open(path, "a") as fh:
+            fh.write("".join(json.dumps(r) + "\n" for r in rows))
+        os.utime(path, (now - age, now - age))  # older file, earlier batch
 
     wh_s, ckpt = str(tmp_path / "wh_inc"), str(tmp_path / "ckpt_inc")
     q = stream_into_warehouse(
         stream_breadcrumbs(spark, drop_dir, max_files_per_trigger=1),
         wh_s, ckpt, incremental=True,
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     promoted = promote_stage(spark, wh_s)
     assert promoted > 0
 
@@ -359,7 +380,8 @@ def test_incremental_mode_survives_multibatch_day(spark, drop_dir, tmp_path):
         )
 
     assert canon_fact(wh_s) == canon_fact(wh_b)
-    assert read_dim(spark, wh_s).count() == read_dim(spark, wh_b).count()
+    assert canon_dim(spark, wh_s) == canon_dim(spark, wh_b)
+    assert read_dim(spark, wh_s).where("trip_id = 7001").first().vehicle_id == 3002
     # promote is a pure function of the retained stage: re-running it
     # (crash-retry) recomputes the same days with the same rows
     assert promote_stage(spark, wh_s) == promoted
@@ -385,7 +407,7 @@ def test_vacuum_stage_keeps_open_days(spark, drop_dir, tmp_path):
         stream_breadcrumbs(spark, drop_dir, max_files_per_trigger=1),
         wh, ckpt, incremental=True,
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     total = promote_stage(spark, wh)
     kept = vacuum_stage(spark, wh, "2023-01-04")
     assert 0 < kept < total
@@ -457,7 +479,7 @@ def test_tws_trip_progress_across_batches(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         rows = spark.sql("SELECT * FROM trip_progress_tws").collect()
     finally:
         if prev is None:
@@ -500,7 +522,7 @@ def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
         q = stream_into_warehouse(
             stream_breadcrumbs(spark, str(d)), wh, ckpt, incremental=True
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         promote_stage(spark, wh)
 
     run_stream()
@@ -710,7 +732,7 @@ def test_trending_stream_equals_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     streamed = rank_trending(spark.sql("SELECT * FROM trend_stream"), k=3)
     batch = rank_trending(type_counts_windowed(ev, "1 hour"), k=3)
     got = sorted(map(tuple, streamed.collect()))
