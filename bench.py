@@ -2,7 +2,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "compiles": {name: count}, "sf": ...}.
 
 Each query is forced end-to-end with the noop sink (computes every output
 column, no driver collect bottleneck), so timings reflect the full plan
@@ -19,7 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from busdata_pipeline_spark.session import get_spark  # noqa: E402
+from busdata_pipeline_spark.session import compile_count, get_spark  # noqa: E402
 
 HEADLINERS = [
     "rel_q1_pricing_summary",      # scan + 8-agg hash aggregate
@@ -145,16 +145,29 @@ def main() -> None:
     wanted = override.split(",") if override else HEADLINERS
     names = [n for n in wanted if n in queries]
 
+    compiles: dict[str, int] = {}
+    warmed: set[str] = set()
+
     def run(name: str) -> float:
+        c0 = compile_count(spark)
         t0 = time.perf_counter()
         queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        elapsed = time.perf_counter() - t0
+        if name in warmed:  # first run after the warm pass
+            compiles.setdefault(name, compile_count(spark) - c0)
+        warmed.add(name)
+        return elapsed
 
-    # Warm pass amortizes JVM JIT, whole-stage-codegen compilation, and
-    # parquet footer caches (one-time costs on any long-running cluster);
-    # min-of-N because this box has up to ~2x run-to-run variance (GC
-    # timing, shared-host jitter) — the minimum is the stable estimate of
-    # the plan's actual cost across rounds.
+    # Warm pass amortizes JVM JIT and parquet footer caches (one-time
+    # costs on any long-running cluster), and whole-stage-codegen
+    # compilation only while the pass's generated classes fit the
+    # JVM-wide codegen cache (session.CODEGEN_CACHE_ENTRIES): an evicted
+    # class is compiled again in the timed runs, which ``compiles`` —
+    # each query's compile count in its first timed run, a
+    # host-independent figure — makes visible.  Min-of-N because this
+    # box has up to ~2x run-to-run variance (GC timing, shared-host
+    # jitter) — the minimum is the stable estimate of the plan's actual
+    # cost across rounds.
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
     timings, errors = time_queries(run, names, repeats)
 
@@ -164,6 +177,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "compiles": {n: compiles[n] for n in timings if n in compiles},
         "sf": sf,
         # 1-min load average at finish: r7 (+11%) and r8 (+24%) both
         # turned out to be slow-box regimes the judge had to re-derive

@@ -27,8 +27,41 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
+from pyspark.serializers import CPickleSerializer
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+#: Upper bound on waiting for a counted round's observed metric.  The
+#: checkpoint job has already finished when the wait starts, so a wait
+#: this long means the metric was lost, not that the round is slow.
+OBSERVE_TIMEOUT_S = 120.0
+
+
+def observed_metrics(obs: Observation, what: str,
+                     timeout_s: float = OBSERVE_TIMEOUT_S) -> dict:
+    """``obs.get`` with a finite wait: raises ``TimeoutError`` naming
+    ``what`` instead of blocking forever when the observed action never
+    reports (``Observation.get`` has no timeout).
+
+    Uses the private ``obs._jo`` (the JVM ``org.apache.spark.sql.
+    Observation``) to await its public Scala ``future()`` with a bounded
+    ``scala.concurrent.duration.Duration``."""
+    jvm = obs._jvm
+    wait = jvm.scala.concurrent.duration.Duration.apply(
+        int(timeout_s * 1000), "ms"
+    )
+    try:
+        jrow = jvm.scala.concurrent.Await.result(obs._jo.future(), wait)
+    except Py4JJavaError as exc:
+        name = exc.java_exception.getClass().getName()
+        if name != "java.util.concurrent.TimeoutException":
+            raise
+        raise TimeoutError(
+            f"{what}: observed metrics did not arrive within {timeout_s:g} s"
+        ) from None
+    utils = getattr(jvm, "org.apache.spark.sql.api.python.PythonSQLUtils")
+    return CPickleSerializer().loads(utils.toPyRow(jrow)).asDict(recursive=False)
 
 
 def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
@@ -128,7 +161,9 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
                 F.sum((F.col("component") < F.col("prev")).cast("long"))
                 .alias("changed"),
             ).localCheckpoint(eager=True)
-            changed = obs.get["changed"] or 0  # None on an empty graph
+            changed = observed_metrics(
+                obs, f"connected_components round {rnd}"
+            )["changed"] or 0  # None on an empty graph
         labels = new_labels.select("id", "component")
         if counted and changed == 0:
             break

@@ -58,6 +58,32 @@ TUNING = {
 }
 
 
+#: Entries in Spark's generated-class cache (``spark.sql.codegen.cache.
+#: maxEntries``, default 100).  The cache evicts least-recently-used
+#: first, and a pass over the engine's queries cycles through far more
+#: distinct generated classes than 100: one ``curation_batch`` pass
+#: compiles ~249, one cycle over the 56 bench headliners at sf0.01
+#: ~1200.  A cyclic access pattern larger than an LRU evicts every class
+#: before its next use, so each pass recompiled everything the last pass
+#: compiled (~0.8 s of Janino per ~3.8 s curation pass on 4 vCPUs).
+#: Census, read from ``CodegenMetrics``: one cycle over the full registry
+#: (282 queries, sf0.001) compiles 3744 distinct classes (5535 at the
+#: default cap, which evicts within the cycle); the cap is ~1.5x that.
+#: The cache is JVM-wide and the conf is static: it is fixed when the
+#: JVM's first session is built, so a session built elsewhere and handed
+#: to the engine keeps its own cap; ``apply_session_conf`` does not
+#: touch it.
+CODEGEN_CACHE_ENTRIES = 5600
+
+
+def compile_count(spark: SparkSession) -> int:
+    """Generated classes compiled so far in this JVM (Janino compile
+    count from Spark's ``CodegenMetrics``); a delta across a run counts
+    the codegen-cache misses it caused, independent of host speed."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(cm.METRIC_COMPILATION_TIME().getCount())
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -77,6 +103,7 @@ def get_spark(app_name: str = "busdata-pipeline-spark",
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # saveAsTable target for bucketed layouts (operators/bucketing.py);
         # kept out of the repo tree.
         .config(

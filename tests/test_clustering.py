@@ -1,10 +1,17 @@
 """Connected-components / dedup-cluster operator tests."""
 from __future__ import annotations
 
+import time
+
+import pytest
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
+
 from busdata_pipeline_spark.operators.clustering import (
     connected_components,
     dedup_clusters,
     dedup_summary,
+    observed_metrics,
 )
 
 
@@ -66,3 +73,17 @@ def test_nonconvergence_raises_instead_of_wrong_labels(spark):
     )
     with _pytest.raises(RuntimeError, match="did not converge"):
         connected_components(chain, max_iter=2)
+
+
+def test_observed_metrics_wait_is_bounded(spark):
+    """An observed action that never runs must fail the wait within its
+    timeout, naming the caller's round, instead of hanging the loop."""
+    obs = Observation()
+    df = spark.range(5).observe(obs, F.count(F.lit(1)).alias("n"))
+    t0 = time.perf_counter()
+    with pytest.raises(TimeoutError, match="round 3"):
+        observed_metrics(obs, "connected_components round 3", timeout_s=0.5)
+    assert time.perf_counter() - t0 < 30
+    # once the action runs, the same bounded wait returns the metrics
+    df.collect()
+    assert observed_metrics(obs, "after the action") == {"n": 5}

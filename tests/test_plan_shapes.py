@@ -218,6 +218,8 @@ def test_fanout_size_gate(spark):
         "id AS vec_id", "CAST(id AS STRING) AS text"
     )
     target = spark.sparkContext.defaultParallelism
+    if target <= 1:
+        pytest.skip("one core: no input can be under-partitioned")
     assert df.rdd.getNumPartitions() < target  # premise: under-partitioned
 
     # estimated size is tiny -> a large gate skips the repartition
