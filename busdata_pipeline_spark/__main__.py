@@ -55,6 +55,7 @@ def cmd_subscribe(args: argparse.Namespace) -> int:
         stream_breadcrumbs,
         stream_into_warehouse,
     )
+    from busdata_pipeline_spark.streaming.replay import await_or_raise
 
     spark = _spark("subscribe")
     q = stream_into_warehouse(
@@ -63,7 +64,12 @@ def cmd_subscribe(args: argparse.Namespace) -> int:
         args.checkpoint or f"{args.warehouse}/_checkpoint",
         incremental=True,
     )
-    q.awaitTermination(args.timeout)
+    try:
+        await_or_raise(q, args.timeout)
+    except TimeoutError as e:
+        # a half-staged day must not be promoted
+        print(e, file=sys.stderr)
+        return 1
     promote_stage(spark, args.warehouse)
     print(f"subscribed {args.drop_dir} -> {args.warehouse}")
     return 0

@@ -192,12 +192,11 @@ def st_pyds_poll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     readStream over the collector fleet (poll counter = offset, id
     slices = partitions), drained with availableNow into a memory sink
     and hash-checked against the closed-form poll replay."""
-    import uuid
-
     from busdata_pipeline_spark.functions.timestamps import (
         breadcrumb_timestamp,
     )
     from busdata_pipeline_spark.sources import pyds
+    from busdata_pipeline_spark.streaming.replay import drain
 
     pyds.register(spark)
     stream = (
@@ -207,27 +206,15 @@ def st_pyds_poll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("max_polls", "3")
         .load()
     )
-    name = "pyds_poll_" + uuid.uuid4().hex
-    q = (
-        stream.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    out = (
-        spark.table(name)
-        .select(
+    return drain(
+        stream,
+        lambda t: t.select(
             F.col("VEHICLE_ID").cast("bigint").alias("vehicle_id"),
             F.col("EVENT_NO_TRIP").alias("event_no_trip"),
             F.col("ACT_TIME").alias("act_time"),
             breadcrumb_timestamp("OPD_DATE", "ACT_TIME").alias("ts"),
-        )
-        .orderBy("vehicle_id", "event_no_trip", "act_time")
-        .localCheckpoint(eager=True)
+        ).orderBy("vehicle_id", "event_no_trip", "act_time"),
     )
-    spark.catalog.dropTempView(name)
-    return out
 
 
 @query(

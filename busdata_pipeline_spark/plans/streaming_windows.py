@@ -12,23 +12,24 @@ from pyspark.sql import functions as F
 
 from busdata_pipeline_spark.plans.registry import query
 from busdata_pipeline_spark.sources import table
+from busdata_pipeline_spark.streaming.replay import (
+    await_or_raise,
+    cdc_merge_replay,
+    dedup_replay,
+    drain,
+    ewma_stream_replay,
+    replay_scratch,
+    stage_batches,
+    staged_stream,
+    stream_join_replay,
+    stream_left_join_replay,
+    watermark_replay,
+)
 from busdata_pipeline_spark.streaming.windows import (
     session_stats,
     sliding_counts,
     tumbling_counts,
 )
-
-
-def _await_or_raise(q, timeout: int) -> None:
-    """awaitTermination returning False means the query is STILL
-    RUNNING — reading the sink then would return a partial result and
-    leak the query.  Stop it and fail loudly instead (ADVICE r8)."""
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {q.name or q.id} did not finish within "
-            f"{timeout}s; refusing to read a partially-filled sink"
-        )
 
 
 @query(
@@ -115,8 +116,6 @@ def st_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch 4 = day-2 rows (advance the watermark so finalized windows
     emit).  The oracle recomputes the exact kept/dropped/emitted set in
     SQL, so the drop-vs-keep decision itself is what's hash-checked."""
-    from busdata_pipeline_spark.streaming.replay import watermark_replay
-
     ev = table(spark, sf_dir, "events")
     day1 = ev.where(F.to_date("ts") == F.lit("2024-01-01").cast("date"))
     b1 = day1.where(F.col("event_id") % 2 == 0)
@@ -147,8 +146,6 @@ def st_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppressed and the emitted set is exactly the distinct input; at
     scale the same operator holds state only for one delay window per
     key instead of forever."""
-    from busdata_pipeline_spark.streaming.replay import dedup_replay
-
     ev = table(spark, sf_dir, "events")
     day1 = ev.where(F.to_date("ts") == F.lit("2024-01-01").cast("date"))
     b1 = day1.where(F.col("event_id") % 2 == 0)
@@ -226,8 +223,6 @@ def st_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     has advanced ~2 days — they are dropped at input and their partner
     state is evicted, so they contribute no pairs.  The kept/dropped
     split is what the oracle hash-checks."""
-    from busdata_pipeline_spark.streaming.replay import stream_join_replay
-
     ev = table(spark, sf_dir, "events")
 
     def day(n: int):
@@ -299,7 +294,7 @@ def st_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     for attempt in ("ck1", "ck2"):  # ck2 = fresh checkpoint: full redelivery
         q = stream_into_jdbc(stream, url, "day1_events",
                              checkpoint=f"{root}/{attempt}", key="event_id")
-        _await_or_raise(q, 120)
+        await_or_raise(q, 120)
     return read_jdbc(spark, url, "day1_events").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("user_id").alias("n_users"),
@@ -337,8 +332,6 @@ def st_cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/replay.cdc_merge_replay); the returned table is the final
     target state, so the hash-check covers batch ordering, every MERGE
     branch, and cross-batch update-after-insert."""
-    from busdata_pipeline_spark.streaming.replay import cdc_merge_replay
-
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
     )
@@ -390,13 +383,6 @@ def st_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     between batches would be picked up (the canonical streaming-enrich
     contract).  Output is the enriched row set, hash-checked against the
     batch join."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from busdata_pipeline_spark.streaming.replay import _stage_single_file
-
     ev = table(spark, sf_dir, "events")
     day1 = ev.where(F.to_date("ts") == F.lit("2024-01-01").cast("date")).select(
         "event_id", "user_id", "value"
@@ -405,44 +391,19 @@ def st_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey"), F.col("c_mktsegment")
     )
 
-    scratch = tempfile.mkdtemp(prefix="st_static_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream_dir = os.path.join(scratch, "stream")
-        ckpt = os.path.join(scratch, "ckpt")
-        os.makedirs(stream_dir)
+    with replay_scratch(spark, "st_static_") as scratch:
         # two micro-batches: even / odd event ids
-        _stage_single_file(
-            day1.where(F.col("event_id") % 2 == 0), scratch, stream_dir, 0
-        )
-        _stage_single_file(
-            day1.where(F.col("event_id") % 2 == 1), scratch, stream_dir, 1
-        )
-        src = (
-            spark.readStream
-            .schema("event_id bigint, user_id bigint, value double")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stream_dir)
+        src = staged_stream(
+            spark,
+            [day1.where(F.col("event_id") % 2 == i) for i in (0, 1)],
+            f"{scratch}/stream",
+            "event_id bigint, user_id bigint, value double",
         )
         enriched = src.join(
             F.broadcast(dim), src.user_id == dim.c_custkey
         ).select("event_id", "user_id", "c_mktsegment", "value")
-        name = "st_static_" + uuid.uuid4().hex
-        q = (
-            enriched.writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, 300)
-        out = spark.table(name).orderBy("event_id").localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(scratch, ignore_errors=True)
+        return drain(enriched, lambda t: t.orderBy("event_id"),
+                     checkpoint=f"{scratch}/ckpt")
 
 
 @query(
@@ -477,10 +438,6 @@ def st_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream interval join, driver-visible: the
     matched pairs AND the watermark-sealed null emissions are both in
     the hash (streaming/replay.stream_left_join_replay)."""
-    from busdata_pipeline_spark.streaming.replay import (
-        stream_left_join_replay,
-    )
-
     base = F.lit("2024-01-01 10:00:00").cast("timestamp")
 
     def clicks(lo: int, hi: int) -> DataFrame:
@@ -574,8 +531,6 @@ def st_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted per-event smoothed values must hash-match the batch
     recurrence over the unsplit series — stream == batch for a custom
     stateful operator, driver-checked strictly."""
-    from busdata_pipeline_spark.streaming.replay import ewma_stream_replay
-
     # ts IS NOT NULL is part of the contract on BOTH engines: the
     # day-bounded batch split would silently drop NULL-ts rows, and the
     # engines disagree on NULL placement in the recurrence's ORDER BY.
@@ -727,16 +682,10 @@ def st_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen'd projection per micro-batch (no state store, no shuffle);
     the kept set is hash-checked against the batch replay, so the
     stream path provably drops exactly the docs batch training would."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from busdata_pipeline_spark.plans.curation_ext import (
         _lr_features,
         _lr_fit,
     )
-    from busdata_pipeline_spark.streaming.replay import _stage_single_file
 
     feats = _lr_features(spark, sf_dir)
     _hist, w = _lr_fit(feats)
@@ -744,24 +693,12 @@ def st_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", "n_chars"
     )
-    scratch = tempfile.mkdtemp(prefix="st_gate_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream_dir = os.path.join(scratch, "stream")
-        ckpt = os.path.join(scratch, "ckpt")
-        os.makedirs(stream_dir)
-        _stage_single_file(
-            docs.where(F.col("doc_id") % 2 == 0), scratch, stream_dir, 0
-        )
-        _stage_single_file(
-            docs.where(F.col("doc_id") % 2 == 1), scratch, stream_dir, 1
-        )
-        src = (
-            spark.readStream
-            .schema("doc_id bigint, text string, n_chars bigint")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stream_dir)
+    with replay_scratch(spark, "st_gate_") as scratch:
+        src = staged_stream(
+            spark,
+            [docs.where(F.col("doc_id") % 2 == i) for i in (0, 1)],
+            f"{scratch}/stream",
+            "doc_id bigint, text string, n_chars bigint",
         )
         toks = F.filter(
             F.split(F.trim("text"), " "), lambda x: x != F.lit("")
@@ -796,21 +733,8 @@ def st_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score"),
             p.alias("_p"),
         ).where(F.col("_p") >= 0.5).drop("_p")
-        name = "st_gate_" + uuid.uuid4().hex
-        q = (
-            gated.writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q, 300)
-        out = spark.table(name).orderBy("doc_id").localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(scratch, ignore_errors=True)
+        return drain(gated, lambda t: t.orderBy("doc_id"),
+                     checkpoint=f"{scratch}/ckpt")
 
 
 # ---------------------------------------------------------------------------
@@ -919,20 +843,14 @@ def st_trip_timeout_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _run_tws_over_events(spark: SparkSession, sf_dir: str,
                          build, finish) -> DataFrame:
-    """Shared transformWithState-over-events runner: stages the events
-    table as three EVENT-TIME-ordered breadcrumb JSONL slices (strictly
-    increasing mtimes + maxFilesPerTrigger=1 -> one micro-batch per
-    slice, so the per-batch event-time walk equals the global walk and
-    a 10 s watermark never drops data), drains ``build(stream)``
-    through a parquet sink with availableNow (which fires the
-    final-watermark timer flush), and returns ``finish(read_back)``
-    materialized (localCheckpoint) BEFORE scratch cleanup.  Conf
-    juggling: transformWithState needs the multi-column-family RocksDB
-    store; both knobs are restored on exit."""
-    import os
-    import shutil
-    import tempfile
-
+    """Shared transformWithState-over-events runner: the events table
+    as three EVENT-TIME-ordered breadcrumb JSONL slices, one per
+    micro-batch (so the per-batch event-time walk equals the global
+    walk and a 10 s watermark never drops data), drained through
+    ``build(stream)`` into a parquet sink with availableNow (which
+    fires the final-watermark timer flush); returns
+    ``finish(read_back)``.  transformWithState needs the
+    multi-column-family RocksDB state store, pinned for the replay."""
     from pyspark.sql.window import Window
 
     from busdata_pipeline_spark.streaming.ingest import stream_breadcrumbs
@@ -955,53 +873,32 @@ def _run_tws_over_events(spark: SparkSession, sf_dir: str,
         F.lit(-122.6).alias("GPS_LONGITUDE"),
         F.ntile(3).over(Window.orderBy("ts")).alias("_slice"),
     )
-    scratch = tempfile.mkdtemp(prefix="st_tws_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass":
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
-    )
-    try:
-        drop = os.path.join(scratch, "drop")
-        os.makedirs(drop)
-        import glob as _glob
-        for i in (1, 2, 3):
-            stage = os.path.join(scratch, f"stage_{i}")
-            (crumbs.where(F.col("_slice") == i).drop("_slice")
-             .coalesce(1).write.mode("overwrite").json(stage))
-            src = _glob.glob(os.path.join(stage, "part-*.json"))[0]
-            dst = os.path.join(drop, f"slice_{i}.jsonl")
-            shutil.move(src, dst)
-            t = 1_000_000 + i * 1000   # FileStreamSource orders by mtime
-            os.utime(dst, (t, t))
-        out_dir = os.path.join(scratch, "verdicts")
+    }
+    with replay_scratch(spark, "st_tws_", rocksdb) as scratch:
+        drop = f"{scratch}/drop"
+        stage_batches(
+            [crumbs.where(F.col("_slice") == i).drop("_slice")
+             for i in (1, 2, 3)],
+            drop, fmt="json",
+        )
+        out_dir = f"{scratch}/verdicts"
         q = (
             build(stream_breadcrumbs(spark, drop, max_files_per_trigger=1))
             .writeStream.format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+            .option("checkpointLocation", f"{scratch}/ckpt")
             .outputMode("append")
             .trigger(availableNow=True)
             .start()
         )
-        _await_or_raise(q, 600)
+        await_or_raise(q, 600)
         return finish(spark.read.parquet(out_dir)).localCheckpoint(
             eager=True
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 _SESS_GAP_MS = 21_600_000    # 6 h — a different rhythm than the 8 h

@@ -25,7 +25,18 @@ So with batches [on_time, filler, late, future]:
   dropped              = late rows with window_end <= wm_late
   emitted              = windows with window_end <= max(ts in future) - delay
 which an ANSI-SQL oracle can state exactly.
+
+The replay protocol lives here and nowhere else: ``replay_scratch``
+makes the scratch dir and pins the confs, ``stage_batches`` /
+``staged_stream`` stage one file per micro-batch, ``drain`` (memory
+sink) or ``await_or_raise`` (any other sink) waits for the
+``availableNow`` query with a bound, and the result is materialized
+with ``localCheckpoint(eager=True)`` before the scratch dir, the temp
+view and the confs are released.  A query that does not finish in time
+is stopped and raises ``TimeoutError``; no caller ever reads a
+half-filled sink.
 """
+
 
 from __future__ import annotations
 
@@ -34,24 +45,108 @@ import os
 import shutil
 import tempfile
 import uuid
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _stage_single_file(df: DataFrame, scratch: str, stream_dir: str,
-                       seq: int) -> None:
-    """Write ``df`` as exactly one parquet file named into the stream
-    directory with a strictly increasing mtime (FileStreamSource orders
-    by modification time)."""
-    stage = os.path.join(scratch, f"stage_{seq}")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    parts = sorted(glob.glob(os.path.join(stage, "part-*.parquet")))
-    assert len(parts) == 1, "coalesce(1) must produce one file"
-    dest = os.path.join(stream_dir, f"batch_{seq}.parquet")
-    shutil.move(parts[0], dest)
-    t = 1_000_000 + seq * 1000
-    os.utime(dest, (t, t))
+@contextmanager
+def replay_scratch(spark: SparkSession, prefix: str,
+                   confs: dict[str, str] | None = None) -> Iterator[str]:
+    """Yield a fresh scratch dir with ``confs`` pinned on the session;
+    on exit restore each conf (unset it if it was unset before) and
+    remove the dir.
+
+    ``spark.sql.shuffle.partitions`` is always pinned to 8: the
+    state-store partition count is fixed per checkpoint at first run,
+    and a vanilla 200-partition session makes every micro-batch run 200
+    tiny stateful tasks.  Each replay is its own query with a fresh
+    checkpoint, so it can pin a small count and restore afterwards."""
+    pinned = {"spark.sql.shuffle.partitions": "8", **(confs or {})}
+    prev = {k: spark.conf.get(k, None) for k in pinned}
+    scratch = tempfile.mkdtemp(prefix=prefix)
+    try:
+        for k, v in pinned.items():
+            spark.conf.set(k, v)
+        yield scratch
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def stage_batches(batches: list[DataFrame], stream_dir: str,
+                  fmt: str = "parquet") -> None:
+    """Write each of ``batches`` as exactly one ``fmt`` file into
+    ``stream_dir`` with strictly increasing mtimes: FileStreamSource
+    orders by modification time, so with ``maxFilesPerTrigger=1`` batch
+    i is micro-batch i."""
+    os.makedirs(stream_dir, exist_ok=True)
+    for seq, df in enumerate(batches):
+        stage = f"{stream_dir}.stage_{seq}"
+        df.coalesce(1).write.mode("overwrite").format(fmt).save(stage)
+        parts = glob.glob(os.path.join(stage, "part-*"))
+        assert len(parts) == 1, "coalesce(1) must produce one file"
+        dest = os.path.join(stream_dir, f"batch_{seq}.{fmt}")
+        shutil.move(parts[0], dest)
+        shutil.rmtree(stage)
+        t = 1_000_000 + seq * 1000
+        os.utime(dest, (t, t))
+
+
+def staged_stream(spark: SparkSession, batches: list[DataFrame],
+                  stream_dir: str, schema: str) -> DataFrame:
+    """Stage ``batches``, projected to the columns of the flat DDL
+    ``schema``, and return a parquet file stream over them admitting
+    one file per micro-batch."""
+    cols = [f.split()[0] for f in schema.split(",")]
+    stage_batches([b.select(*cols) for b in batches], stream_dir)
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stream_dir)
+    )
+
+
+def await_or_raise(q, timeout: float) -> None:
+    """awaitTermination returning False means the query is STILL
+    RUNNING — reading the sink then would return a partial result and
+    leak the query.  Stop it and fail loudly instead."""
+    if not q.awaitTermination(timeout):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not finish within "
+            f"{timeout}s; refusing to read a partially-filled sink"
+        )
+
+
+def drain(stream: DataFrame,
+          finish: Callable[[DataFrame], DataFrame] = lambda t: t,
+          output_mode: str = "append", checkpoint: str | None = None,
+          timeout: float = 300) -> DataFrame:
+    """Run ``stream`` with availableNow into a memory sink, wait at most
+    ``timeout`` s (``await_or_raise``), and return ``finish(sink)``
+    materialized; the sink's temp view is dropped on every path."""
+    spark = stream.sparkSession
+    name = "replay_" + uuid.uuid4().hex
+    writer = (
+        stream.writeStream.format("memory").queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    q = writer.start()
+    try:
+        await_or_raise(q, timeout)
+        return finish(spark.table(name)).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def watermark_replay(spark: SparkSession, batches: list[DataFrame],
@@ -63,25 +158,9 @@ def watermark_replay(spark: SparkSession, batches: list[DataFrame],
     DataFrame.  Everything is deterministic: file order is pinned by
     mtime, batch admission by maxFilesPerTrigger=1, and the drop/emit
     boundaries follow the module-docstring semantics."""
-    scratch = tempfile.mkdtemp(prefix="wm_replay_")
-    # The state-store partition count is fixed per checkpoint at first
-    # run; a vanilla 200-partition session makes every micro-batch run
-    # 200 tiny stateful tasks.  The replay is its own query with a fresh
-    # checkpoint, so pin a small count for it and restore afterwards.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream_dir = os.path.join(scratch, "stream")
-        ckpt = os.path.join(scratch, "ckpt")
-        os.makedirs(stream_dir)
-        for i, b in enumerate(batches):
-            _stage_single_file(b.select("ts", "value"), scratch, stream_dir, i)
-
-        src = (
-            spark.readStream.schema("ts timestamp, value double")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stream_dir)
-        )
+    with replay_scratch(spark, "wm_replay_") as scratch:
+        src = staged_stream(spark, batches, f"{scratch}/stream",
+                            "ts timestamp, value double")
         agg = (
             src.withWatermark("ts", delay)
             .groupBy(F.window("ts", width).alias("w"))
@@ -95,23 +174,37 @@ def watermark_replay(spark: SparkSession, batches: list[DataFrame],
                 "total_value",
             )
         )
-        name = "wm_replay_" + uuid.uuid4().hex
-        q = (
-            agg.writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        return drain(agg, checkpoint=f"{scratch}/ckpt")
+
+
+def _interval_join(spark: SparkSession, scratch: str,
+                   left_batches: list[DataFrame],
+                   right_batches: list[DataFrame],
+                   delay: str, lookback: str, how: str) -> DataFrame:
+    """Stage both sides (batch i of each is micro-batch i) and join them
+    as watermarked file streams: left rows match right rows of the same
+    ``user_id`` with ``rts ∈ [lts - lookback, lts]``."""
+    assert len(left_batches) == len(right_batches)
+    schema = "user_id bigint, ts timestamp, value double"
+
+    def side(batches: list[DataFrame], p: str) -> DataFrame:
+        return (
+            staged_stream(spark, batches, f"{scratch}/{p}", schema)
+            .select(
+                F.col("user_id").alias(f"{p}_user"),
+                F.col("ts").alias(f"{p}ts"),
+                F.col("value").alias(f"{p}val"),
+            )
+            .withWatermark(f"{p}ts", delay)
         )
-        q.awaitTermination(300)
-        # Materialize off the memory sink so the scratch dirs (and the
-        # temp view) can be dropped before returning.
-        out = spark.table(name).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(scratch, ignore_errors=True)
+
+    return side(left_batches, "l").join(
+        side(right_batches, "r"),
+        (F.col("l_user") == F.col("r_user"))
+        & (F.col("rts") >= F.col("lts") - F.expr(f"INTERVAL {lookback}"))
+        & (F.col("rts") <= F.col("lts")),
+        how,
+    )
 
 
 def stream_join_replay(spark: SparkSession,
@@ -136,75 +229,19 @@ def stream_join_replay(spark: SparkSession,
     Returns the emitted pairs aggregated per click hour — a
     deterministic, oracle-checkable shape.
     """
-    assert len(left_batches) == len(right_batches)
-    scratch = tempfile.mkdtemp(prefix="sj_replay_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        ldir = os.path.join(scratch, "left")
-        rdir = os.path.join(scratch, "right")
-        ckpt = os.path.join(scratch, "ckpt")
-        os.makedirs(ldir)
-        os.makedirs(rdir)
-        for i, (lb, rb) in enumerate(zip(left_batches, right_batches)):
-            _stage_single_file(
-                lb.select("user_id", "ts", "value"), scratch, ldir, i
-            )
-            _stage_single_file(
-                rb.select("user_id", "ts", "value"), scratch, rdir, i
-            )
-
-        schema = "user_id bigint, ts timestamp, value double"
-        left = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(ldir)
-            .select(
-                F.col("user_id").alias("l_user"),
-                F.col("ts").alias("lts"),
-                F.col("value").alias("lval"),
-            )
-            .withWatermark("lts", delay)
-        )
-        right = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(rdir)
-            .select(
-                F.col("user_id").alias("r_user"),
-                F.col("ts").alias("rts"),
-                F.col("value").alias("rval"),
-            )
-            .withWatermark("rts", delay)
-        )
-        pairs = left.join(
-            right,
-            (F.col("l_user") == F.col("r_user"))
-            & (F.col("rts") >= F.col("lts") - F.expr(f"INTERVAL {lookback}"))
-            & (F.col("rts") <= F.col("lts")),
-            "inner",
-        )
-        name = "sj_replay_" + uuid.uuid4().hex
-        q = (
-            pairs.writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        out = (
-            spark.table(name)
-            .groupBy(F.date_trunc("hour", "lts").alias("click_hour"))
-            .agg(
+    with replay_scratch(spark, "sj_replay_") as scratch:
+        pairs = _interval_join(spark, scratch, left_batches, right_batches,
+                               delay, lookback, "inner")
+        return drain(
+            pairs,
+            lambda t: t.groupBy(
+                F.date_trunc("hour", "lts").alias("click_hour")
+            ).agg(
                 F.count(F.lit(1)).alias("n_pairs"),
                 F.round(F.sum("rval"), 2).alias("view_value"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            checkpoint=f"{scratch}/ckpt",
         )
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def dedup_replay(spark: SparkSession, batches: list[DataFrame],
@@ -226,42 +263,14 @@ def dedup_replay(spark: SparkSession, batches: list[DataFrame],
     redelivered rows are byte-identical the emitted set is exactly the
     distinct input.
     """
-    scratch = tempfile.mkdtemp(prefix="dd_replay_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream_dir = os.path.join(scratch, "stream")
-        ckpt = os.path.join(scratch, "ckpt")
-        os.makedirs(stream_dir)
-        for i, b in enumerate(batches):
-            _stage_single_file(
-                b.select("event_id", "ts", "value"), scratch, stream_dir, i
-            )
-        src = (
-            spark.readStream
-            .schema("event_id bigint, ts timestamp, value double")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stream_dir)
-        )
+    with replay_scratch(spark, "dd_replay_") as scratch:
+        src = staged_stream(spark, batches, f"{scratch}/stream",
+                            "event_id bigint, ts timestamp, value double")
         deduped = (
             src.withWatermark("ts", delay)
             .dropDuplicatesWithinWatermark(["event_id"])
         )
-        name = "dd_replay_" + uuid.uuid4().hex
-        q = (
-            deduped.writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        out = spark.table(name).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(scratch, ignore_errors=True)
+        return drain(deduped, checkpoint=f"{scratch}/ckpt")
 
 
 def cdc_merge_replay(spark: SparkSession, target_init: DataFrame,
@@ -289,24 +298,10 @@ def cdc_merge_replay(spark: SparkSession, target_init: DataFrame,
     """
     from busdata_pipeline_spark.operators.warehouse import merge_into
 
-    scratch = tempfile.mkdtemp(prefix="cdc_merge_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        target = os.path.join(scratch, "target")
-        stream_dir = os.path.join(scratch, "stream")
-        ckpt = os.path.join(scratch, "ckpt")
-        os.makedirs(stream_dir)
+    with replay_scratch(spark, "cdc_merge_") as scratch:
+        target = f"{scratch}/target"
         target_init.write.mode("overwrite").parquet(target)
-        cols = [f.split()[0] for f in schema_ddl.split(",")]
-        for i, b in enumerate(batches):
-            _stage_single_file(b.select(*cols), scratch, stream_dir, i)
-
-        src = (
-            spark.readStream.schema(schema_ddl)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stream_dir)
-        )
+        src = staged_stream(spark, batches, f"{scratch}/stream", schema_ddl)
 
         def handle(batch: DataFrame, batch_id: int) -> None:
             if batch.isEmpty():
@@ -322,15 +317,12 @@ def cdc_merge_replay(spark: SparkSession, target_init: DataFrame,
 
         q = (
             src.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", f"{scratch}/ckpt")
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        await_or_raise(q, 300)
         return spark.read.parquet(target).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def stream_left_join_replay(spark: SparkSession,
@@ -355,72 +347,19 @@ def stream_left_join_replay(spark: SparkSession,
     Inputs: (user_id, ts, value) per batch.  Returns per click-hour:
     n_clicks / n_matched / summed matched value.
     """
-    assert len(left_batches) == len(right_batches)
-    scratch = tempfile.mkdtemp(prefix="slj_replay_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        ldir = os.path.join(scratch, "left")
-        rdir = os.path.join(scratch, "right")
-        ckpt = os.path.join(scratch, "ckpt")
-        os.makedirs(ldir)
-        os.makedirs(rdir)
-        far = F.lit("2024-03-01 00:00:00").cast("timestamp")
-        seal = left_batches[0].limit(0).sparkSession.range(1).select(
-            F.lit(-1).cast("bigint").alias("user_id"),
-            far.alias("ts"),
-            F.lit(0.0).alias("value"),
+    seal = spark.range(1).select(
+        F.lit(-1).cast("bigint").alias("user_id"),
+        F.lit("2024-03-01 00:00:00").cast("timestamp").alias("ts"),
+        F.lit(0.0).alias("value"),
+    )
+    with replay_scratch(spark, "slj_replay_") as scratch:
+        pairs = _interval_join(
+            spark, scratch, [*left_batches, seal, seal],
+            [*right_batches, seal, seal], delay, lookback, "left_outer",
         )
-        lbs = list(left_batches) + [seal, seal]
-        rbs = list(right_batches) + [seal, seal]
-        for i, (lb, rb) in enumerate(zip(lbs, rbs)):
-            _stage_single_file(
-                lb.select("user_id", "ts", "value"), scratch, ldir, i
-            )
-            _stage_single_file(
-                rb.select("user_id", "ts", "value"), scratch, rdir, i
-            )
-
-        schema = "user_id bigint, ts timestamp, value double"
-        left = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(ldir)
-            .select(
-                F.col("user_id").alias("l_user"),
-                F.col("ts").alias("lts"),
-                F.col("value").alias("lval"),
-            )
-            .withWatermark("lts", delay)
-        )
-        right = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(rdir)
-            .select(
-                F.col("user_id").alias("r_user"),
-                F.col("ts").alias("rts"),
-                F.col("value").alias("rval"),
-            )
-            .withWatermark("rts", delay)
-        )
-        pairs = left.join(
-            right,
-            (F.col("l_user") == F.col("r_user"))
-            & (F.col("rts") >= F.col("lts") - F.expr(f"INTERVAL {lookback}"))
-            & (F.col("rts") <= F.col("lts")),
-            "left_outer",
-        )
-        name = "slj_replay_" + uuid.uuid4().hex
-        q = (
-            pairs.writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        out = (
-            spark.table(name)
-            .where(F.col("l_user") >= 0)
+        return drain(
+            pairs,
+            lambda t: t.where(F.col("l_user") >= 0)
             .groupBy(F.date_trunc("hour", "lts").alias("click_hour"))
             .agg(
                 F.count(F.lit(1)).alias("n_clicks"),
@@ -428,14 +367,9 @@ def stream_left_join_replay(spark: SparkSession,
                 F.round(F.coalesce(F.sum("rval"), F.lit(0.0)), 2)
                 .alias("view_value"),
             )
-            .orderBy("click_hour")
-            .localCheckpoint(eager=True)
+            .orderBy("click_hour"),
+            checkpoint=f"{scratch}/ckpt",
         )
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 def ewma_stream_replay(spark: SparkSession, batches: list[DataFrame],
@@ -455,45 +389,33 @@ def ewma_stream_replay(spark: SparkSession, batches: list[DataFrame],
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     one_minus = 1.0 - alpha
-    scratch = tempfile.mkdtemp(prefix="ewma_replay_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream_dir = os.path.join(scratch, "stream")
-        ckpt = os.path.join(scratch, "ckpt")
-        os.makedirs(stream_dir)
-        cols = ["event_id", "ts", "user_id", "value"]
-        for i, b in enumerate(batches):
-            _stage_single_file_cols(b.select(*cols), scratch, stream_dir, i)
+    cols = ["event_id", "ts", "user_id", "value"]
 
-        src = (
-            spark.readStream
-            .schema("event_id long, ts timestamp, user_id long, value double")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stream_dir)
+    def smooth(key, pdfs, state):
+        import pandas as pd
+
+        s = state.get[0] if state.exists else None
+        frames = [p for p in pdfs]
+        pdf = pd.concat(frames) if frames else pd.DataFrame(columns=cols)
+        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+        out = []
+        for x in pdf["value"].to_numpy():
+            xv = float(x)
+            s = xv if s is None else one_minus * s + alpha * xv
+            out.append(s)
+        if s is not None:
+            state.update((float(s),))
+        yield pd.DataFrame({
+            "event_id": pdf["event_id"].to_numpy(),
+            "user_id": pdf["user_id"].to_numpy(),
+            "ewma": out,
+        })
+
+    with replay_scratch(spark, "ewma_replay_") as scratch:
+        src = staged_stream(
+            spark, batches, f"{scratch}/stream",
+            "event_id long, ts timestamp, user_id long, value double",
         )
-
-        def smooth(key, pdfs, state):
-            import pandas as pd
-
-            s = state.get[0] if state.exists else None
-            frames = [p for p in pdfs]
-            pdf = pd.concat(frames) if frames else pd.DataFrame(
-                columns=cols)
-            pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-            out = []
-            for x in pdf["value"].to_numpy():
-                xv = float(x)
-                s = xv if s is None else one_minus * s + alpha * xv
-                out.append(s)
-            if s is not None:
-                state.update((float(s),))
-            yield pd.DataFrame({
-                "event_id": pdf["event_id"].to_numpy(),
-                "user_id": pdf["user_id"].to_numpy(),
-                "ewma": out,
-            })
-
         res = (
             src.where(F.col("value").isNotNull())
             .groupBy("user_id")
@@ -505,32 +427,5 @@ def ewma_stream_replay(spark: SparkSession, batches: list[DataFrame],
                 GroupStateTimeout.NoTimeout,
             )
         )
-        name = "ewma_replay_" + uuid.uuid4().hex
-        q = (
-            res.writeStream.format("memory").queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        out = spark.table(name).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(scratch, ignore_errors=True)
-
-
-def _stage_single_file_cols(df: DataFrame, scratch: str, stream_dir: str,
-                            seq: int) -> None:
-    """_stage_single_file without the (ts, value)-only projection —
-    keeps whatever columns ``df`` carries."""
-    stage = os.path.join(scratch, f"stage_{seq}")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    parts = sorted(glob.glob(os.path.join(stage, "part-*.parquet")))
-    assert len(parts) == 1, "coalesce(1) must produce one file"
-    dest = os.path.join(stream_dir, f"batch_{seq}.parquet")
-    shutil.move(parts[0], dest)
-    t = 1_000_000 + seq * 1000
-    os.utime(dest, (t, t))
+        return drain(res, output_mode="update",
+                     checkpoint=f"{scratch}/ckpt")

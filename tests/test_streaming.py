@@ -764,6 +764,47 @@ def test_stream_ewma_equals_batch_fold(spark):
     assert got == want and len(got) > 0
 
 
+def test_replay_drain_timeout_stops_and_cleans_up(spark):
+    """A replay drain that cannot finish within its bound raises
+    TimeoutError instead of reading a half-filled sink, and leaves
+    nothing behind: its query is stopped, its temp view dropped, its
+    scratch dir removed and the session's shuffle-partition count
+    restored.  Six staged files at one file per micro-batch cannot
+    drain in 10 ms."""
+    from busdata_pipeline_spark.streaming.replay import (
+        drain,
+        replay_scratch,
+        staged_stream,
+    )
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    active_before = {q.id for q in spark.streams.active}
+    views_before = views()
+    batches = [
+        spark.range(10 * i, 10 * i + 10).select(
+            F.col("id").alias("event_id"),
+            F.col("id").cast("double").alias("value"),
+        )
+        for i in range(6)
+    ]
+    try:
+        with pytest.raises(TimeoutError, match="did not finish within"):
+            with replay_scratch(spark, "timeout_replay_") as scratch:
+                src = staged_stream(spark, batches, f"{scratch}/stream",
+                                    "event_id bigint, value double")
+                drain(src, checkpoint=f"{scratch}/ckpt", timeout=0.01)
+        assert {q.id for q in spark.streams.active} <= active_before
+        assert views() == views_before
+        assert not os.path.exists(scratch)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+
+
 def _drain_tws(q, rows, min_rows, min_input, timeout=90):
     """Poll a ProcessingTime-timeMode TWS query until it has consumed
     ``min_input`` rows and emitted ``min_rows``, then stop it.  An
