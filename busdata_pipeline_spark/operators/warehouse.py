@@ -58,6 +58,13 @@ def _stage_path(warehouse: str) -> str:
     return os.path.join(warehouse, STAGE)
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through Hadoop's FS API: works
+    on any filesystem Spark can write to, not just local disk."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def write_fact_idempotent(fact: DataFrame, warehouse: str) -> None:
     """S11 — overwrite exactly the event-date partitions present in
     ``fact``.  partitionOverwriteMode is pinned on the writer itself:
@@ -77,12 +84,9 @@ def upsert_trip_ignore(trip: DataFrame, warehouse: str) -> None:
     spark = trip.sparkSession
     path = _dim_path(warehouse)
     new = trip.dropDuplicates(["trip_id"])
-    # First-load probe: list the path through Hadoop's FS API (works for
-    # any supported filesystem, not just local) instead of catching a
-    # broad read failure that could mask real errors.
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    # First-load probe instead of catching a broad read failure that
+    # could mask real errors.
+    fs, hpath = _hadoop_path(spark, path)
     if fs.exists(hpath):
         existing = spark.read.schema(TRIP).parquet(path).select("trip_id")
         new = new.join(existing, "trip_id", "left_anti")
@@ -247,9 +251,7 @@ def promote_stage(spark: SparkSession, warehouse: str) -> int:
     Returns the number of staged raw rows promoted.
     """
     stage = _stage_path(warehouse)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(stage)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_path(spark, stage)
     if not fs.exists(hpath):
         return 0
     staged = (
@@ -277,9 +279,7 @@ def vacuum_stage(spark: SparkSession, warehouse: str, before_day: str) -> int:
     from busdata_pipeline_spark.functions.timestamps import breadcrumb_timestamp
 
     stage = _stage_path(warehouse)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(stage)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_path(spark, stage)
     if not fs.exists(hpath):
         return 0
     staged = spark.read.option("basePath", stage).parquet(stage)
@@ -294,7 +294,7 @@ def vacuum_stage(spark: SparkSession, warehouse: str, before_day: str) -> int:
     # after it, the retained data is already durable on disk — no window
     # where the only copy lives in non-fault-tolerant checkpoint blocks.
     tmp = stage.rstrip("/") + ".vacuum-tmp"
-    htmp = jvm.org.apache.hadoop.fs.Path(tmp)
+    _, htmp = _hadoop_path(spark, tmp)
     fs.delete(htmp, True)
     if n:
         for (bid,) in kept.select("ingest_batch").distinct().collect():

@@ -22,6 +22,7 @@ from busdata_pipeline_spark.plans.relational import (
     sum_exact_units,
     sum_money4,
 )
+from busdata_pipeline_spark.scratch import scratch_dir
 from busdata_pipeline_spark.sources import table
 
 
@@ -203,9 +204,6 @@ def etl_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     resulting table must equal the batch GROUP BY over both days.  The
     rollup lands in a per-run temp dir; the merge is the thing under
     test, the storage is scratch."""
-    import shutil
-    import tempfile
-
     from busdata_pipeline_spark.operators.rollup import (
         merge_rollup,
         read_rollup,
@@ -213,9 +211,8 @@ def etl_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = table(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="rollup_q_")
-    shutil.rmtree(path, ignore_errors=True)
-    try:
+    with scratch_dir("rollup_q_") as scratch:
+        path = f"{scratch}/rollup"
         for d in ("2024-01-01", "2024-01-02"):
             day = events.where(F.to_date("ts") == F.lit(d).cast("date"))
             merge_rollup(spark, user_day_delta(day), path)
@@ -225,11 +222,7 @@ def etl_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("total_value", 6).alias("total_value"),
             F.round("max_value", 6).alias("max_value"),
         )
-        # Materialize off the scratch files so the directory can be
-        # removed now instead of leaking a rollup_q_* per invocation.
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -539,9 +532,6 @@ def etl_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     commits (append, append, overwrite, append), then BOTH historical
     snapshots are read back and profiled — the overwrite boundary and
     the as-of reconstruction are in the hash."""
-    import shutil
-    import tempfile
-
     from busdata_pipeline_spark.operators.versioned import (
         read_version,
         write_version,
@@ -552,9 +542,7 @@ def etl_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     def day(d: str) -> DataFrame:
         return ev.where(F.to_date("ts") == F.lit(d).cast("date"))
 
-    path = tempfile.mkdtemp(prefix="ttravel_q_")
-    shutil.rmtree(path, ignore_errors=True)
-    try:
+    with scratch_dir("ttravel_q_") as path:
         write_version(day("2024-01-01"), path, "append")
         write_version(day("2024-01-02"), path, "append")
         write_version(day("2024-01-03"), path, "overwrite")
@@ -571,8 +559,6 @@ def etl_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             snap(2).unionByName(snap(4)).orderBy("version")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -596,8 +582,6 @@ def etl_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     booleans plus the value checksum — so the hash covers both the
     atomic swap's losslessness and the layout change."""
     import glob
-    import shutil
-    import tempfile
 
     from busdata_pipeline_spark.operators.warehouse import (
         _fact_path,
@@ -610,9 +594,7 @@ def etl_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("ts", "tstamp")
         .withColumn("event_date", F.to_date("tstamp"))
     )
-    warehouse = tempfile.mkdtemp(prefix="compact_q_")
-    shutil.rmtree(warehouse, ignore_errors=True)
-    try:
+    with scratch_dir("compact_q_") as warehouse:
         (
             day1.repartition(32)
             .write.mode("overwrite")
@@ -640,8 +622,6 @@ def etl_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / F.lit(1000000.0)).alias("total_value"),
             ).localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(warehouse, ignore_errors=True)
 
 
 @query(
@@ -673,9 +653,6 @@ def etl_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     This closes the window the reference's two sequential INSERTs leave
     open (`/root/reference/transform.py:186-288`: Trip then BreadCrumb,
     a reader between them sees dangling trips)."""
-    import shutil
-    import tempfile
-
     from busdata_pipeline_spark.operators.versioned import (
         txn_commit,
         txn_read,
@@ -684,10 +661,8 @@ def etl_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = table(spark, sf_dir, "customer")
     ev = table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="txn_q_")
-    shutil.rmtree(root, ignore_errors=True)
-    dim_p, fact_p = f"{root}/dim", f"{root}/fact"
-    try:
+    with scratch_dir("txn_q_") as root:
+        dim_p, fact_p = f"{root}/dim", f"{root}/fact"
         v_dim1 = write_version(
             cust.where(F.col("c_custkey") <= 50), dim_p, "append")
         v_fact1 = write_version(
@@ -714,8 +689,6 @@ def etl_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mid_dim_rows long, mid_fact_rows long, "
             "final_dim_rows long, final_fact_rows long",
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -935,8 +908,6 @@ def etl_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     erasure affordable at 100 TB."""
     import glob
     import os
-    import shutil
-    import tempfile
 
     from busdata_pipeline_spark.operators.versioned import (
         read_version,
@@ -948,9 +919,7 @@ def etl_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = table(spark, sf_dir, "events")
     fact = ev.withColumn("event_date", F.to_date("ts"))
-    warehouse = tempfile.mkdtemp(prefix="gdpr_q_")
-    shutil.rmtree(warehouse, ignore_errors=True)
-    try:
+    with scratch_dir("gdpr_q_") as warehouse:
         # repartition BY the partition column: one file per day dir (29
         # files) instead of tasks x days (8 x 29 = 232) — the classic
         # small-files tax; write, vacuum footer reads and re-reads all
@@ -1026,8 +995,6 @@ def etl_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(warehouse, ignore_errors=True)
 
 
 @query(
@@ -1063,9 +1030,6 @@ def etl_retract_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sums are maintained in exact integer cents so retraction subtracts
     out bit-exactly; the oracle's from-scratch rebuild must hash-match
     the incrementally maintained state."""
-    import shutil
-    import tempfile
-
     from busdata_pipeline_spark.operators.rollup import (
         merge_rollup_retract_versioned,
         read_rollup_versioned,
@@ -1083,9 +1047,7 @@ def etl_retract_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("2024-01-16").cast("date"), F.lit("2024-01-18").cast("date")
         )
     )
-    path = tempfile.mkdtemp(prefix="retract_rollup_q_")
-    shutil.rmtree(path, ignore_errors=True)
-    try:
+    with scratch_dir("retract_rollup_q_") as path:
         merge_rollup_retract_versioned(
             spark, retract_partials(base, +1), path)
         delta = retract_partials(retract, -1).unionByName(
@@ -1105,5 +1067,3 @@ def etl_retract_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)

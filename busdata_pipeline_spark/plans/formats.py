@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from busdata_pipeline_spark.plans.registry import query
+from busdata_pipeline_spark.scratch import scratch_dir
 from busdata_pipeline_spark.sources import table
 
 
@@ -64,18 +65,12 @@ def etl_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile is computed from the ORC scan (pushdown intact), and the
     oracle computes the same profile from the original parquet — any
     loss in the conversion breaks the hash."""
-    import shutil
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="orc_q_")
-    shutil.rmtree(path, ignore_errors=True)
-    try:
+    with scratch_dir("orc_q_") as scratch:
+        path = f"{scratch}/orc"
         write_events_orc(spark, sf_dir, path)
         return orc_day_profile(spark, path, "2024-01-01").localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -100,16 +95,12 @@ def etl_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-2 profile from that scan is hash-checked against DuckDB on the
     original parquet.  NULL count is part of the profile because
     null→union-index-0 encoding is exactly where a lossy codec slips."""
-    import shutil
-    import tempfile
-
     from busdata_pipeline_spark.sources.avro import read_avro, write_avro
 
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    path = tempfile.mkdtemp(prefix="avro_q_")
-    try:
+    with scratch_dir("avro_q_") as path:
         write_avro(ev, path)
         back = read_avro(spark, path, ev.schema)
         return (
@@ -124,8 +115,6 @@ def etl_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_type")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -319,9 +308,6 @@ def etl_bronze_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     vehicle_{id}_{date}.json layout) → partition-pruned read-back →
     per-vehicle profile.  The hash covers the fetch, the partitioned
     JSON write, and the read's type round-trip."""
-    import shutil
-    import tempfile
-
     from busdata_pipeline_spark.sources.collector import (
         fake_fetcher,
         fetch_breadcrumbs,
@@ -330,9 +316,8 @@ def etl_bronze_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ids = spark.range(1, 200).select(F.col("id").cast("int").alias("vehicle_id"))
     crumbs = fetch_breadcrumbs(ids, fake_fetcher, parallelism=8)
-    path = tempfile.mkdtemp(prefix="bronze_q_")
-    shutil.rmtree(path, ignore_errors=True)
-    try:
+    with scratch_dir("bronze_q_") as scratch:
+        path = f"{scratch}/bronze"
         write_bronze(crumbs, path)
         back = spark.read.json(path)
         return (
@@ -344,8 +329,6 @@ def etl_bronze_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("vehicle_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -375,16 +358,12 @@ def etl_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     header-lookalike lines survive byte-exactly; the signature is what
     catches a lossy decode.  One file per partition is the production
     WARC parallelization unit (Common Crawl segments)."""
-    import shutil
-    import tempfile
-
     from busdata_pipeline_spark.sources.warc import read_warc, write_warc
 
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
-    path = tempfile.mkdtemp(prefix="warc_q_")
-    try:
+    with scratch_dir("warc_q_") as path:
         write_warc(docs.repartition(4), path)
         back = read_warc(spark, path)
         return (
@@ -400,8 +379,6 @@ def etl_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -433,9 +410,6 @@ def etl_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     format).  multiLine stays OFF so the read splits per-block at any
     scale — embedded newlines belong in quoted parquet/WARC payloads,
     not CSV interchange (documented constraint)."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
     ev = table(spark, sf_dir, "events")
@@ -456,9 +430,8 @@ def etl_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("props", T.StringType()),
         ]
     )
-    path = tempfile.mkdtemp(prefix="csv_q_")
-    shutil.rmtree(path, ignore_errors=True)
-    try:
+    with scratch_dir("csv_q_") as scratch:
+        path = f"{scratch}/csv"
         w = ev.write.mode("overwrite")
         for k, v in opts.items():
             w = w.option(k, v)
@@ -482,8 +455,6 @@ def etl_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_type")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -520,9 +491,6 @@ def etl_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin the merged schema in the catalog instead (spark.read.schema),
     which this query documents as the 100 TB path; the data-plane union
     itself is ordinary split-parallel parquet."""
-    import shutil
-    import tempfile
-
     ev = table(spark, sf_dir, "events")
     d1 = ev.where(F.col("ts").cast("date") == F.lit("2024-01-01").cast("date"))
     d2 = ev.where(
@@ -533,9 +501,8 @@ def etl_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").isNotNull() & (F.col("value") >= 50.0), 1
         ).otherwise(0).cast("int"),
     )
-    path = tempfile.mkdtemp(prefix="schevo_q_")
-    shutil.rmtree(path, ignore_errors=True)
-    try:
+    with scratch_dir("schevo_q_") as scratch:
+        path = f"{scratch}/events"
         d1.select("event_id", "ts", "user_id", "event_type", "value") \
             .write.mode("overwrite").parquet(path)
         d2.select(
@@ -557,5 +524,3 @@ def etl_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("d")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(path, ignore_errors=True)

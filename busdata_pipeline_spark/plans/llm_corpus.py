@@ -50,6 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from busdata_pipeline_spark.plans.registry import query
+from busdata_pipeline_spark.scratch import scratch_dir
 from busdata_pipeline_spark.sources import table
 
 # ---------------------------------------------------------------------------
@@ -1006,9 +1007,6 @@ def td_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     READ BACK, so the no-reshingle property is physical, not notional);
     delta = odd docs + planted truncated copies of every 10th even doc.
     Output: (new_doc_id, store_doc_id, jaccard ≥ 0.5)."""
-    import shutil
-    import tempfile
-
     from busdata_pipeline_spark.operators.dedup import (
         jaccard_pairs,
         minhash_signatures,
@@ -1032,9 +1030,8 @@ def td_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(copies)
     )
 
-    store = tempfile.mkdtemp(prefix="minhash_store_")
-    shutil.rmtree(store, ignore_errors=True)
-    try:
+    with scratch_dir("minhash_store_") as scratch:
+        store = f"{scratch}/store"
         # The store write is the query's unavoidable physical job (the
         # no-reshingle contract) and the DELTA batch's signatures are
         # independent of it until the banded join — so the delta
@@ -1141,12 +1138,7 @@ def td_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "jaccard",
             )
         )
-        # eager checkpoint materializes to Spark-managed storage so the
-        # temp store dir can be removed (td_incremental_dedup pattern —
-        # the result stays DISTRIBUTED, no driver collect)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -27,6 +27,7 @@ from busdata_pipeline_spark.plans.relational import (
     sum_exact_units,
     sum_money4,
 )
+from busdata_pipeline_spark.scratch import scratch_dir
 from busdata_pipeline_spark.sources import table
 
 
@@ -104,20 +105,13 @@ def etl_dpp_weekend_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar dim, and aggregate per day.  Only the weekend partitions are
     read (8 of 30 at sf0.01) — the physical proof lives in
     tests/test_pruning.py; the driver checks the values."""
-    import shutil
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="dpp_q_")
-    shutil.rmtree(path, ignore_errors=True)
-    try:
+    with scratch_dir("dpp_q_") as scratch:
+        path = f"{scratch}/fact"
         write_date_partitioned_events(spark, sf_dir, path)
         result = dpp_weekend_totals(
             spark, path, weekend_dim(spark, sf_dir)
         )
-        # Materialize off the scratch layout so it can be removed now.
         return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -184,9 +178,6 @@ def etl_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max stats and the box bounds are a bounded driver collect (one
     1-row aggregate — the operators/rollup.py scalar-pruning contract).
     """
-    import shutil
-    import tempfile
-
     from busdata_pipeline_spark.operators import layout
 
     ev = table(spark, sf_dir, "events")
@@ -214,9 +205,7 @@ def etl_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     u_lo, u_hi = ulo + (uhi - ulo) * 0.25, ulo + (uhi - ulo) * 0.35
     v_lo, v_hi = vlo + (vhi - vlo) * 0.25, vlo + (vhi - vlo) * 0.35
 
-    scratch = tempfile.mkdtemp(prefix="zorder_q_")
-    shutil.rmtree(scratch, ignore_errors=True)
-    try:
+    with scratch_dir("zorder_q_") as scratch:
         # 16 KiB row groups at driver scale -> ~20 groups over the 10k
         # rows, so skipping is measurable (sf0.01: Z-layout box scan hits
         # 4/20 groups, arrival-order baseline hits 20/20).  In production
@@ -265,8 +254,6 @@ def etl_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

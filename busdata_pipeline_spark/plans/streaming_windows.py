@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from busdata_pipeline_spark.plans.registry import query
+from busdata_pipeline_spark.scratch import scratch_dir
 from busdata_pipeline_spark.sources import table
 from busdata_pipeline_spark.streaming.replay import (
     await_or_raise,
@@ -275,7 +276,7 @@ def st_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is computed from a JDBC scan of the database — so the
     hash-check covers the full relational round-trip AND the
     exactly-once contract, not a parquet shortcut."""
-    import tempfile
+    from py4j.protocol import Py4JJavaError
 
     from busdata_pipeline_spark.operators.warehouse import read_jdbc
     from busdata_pipeline_spark.streaming.ingest import stream_into_jdbc
@@ -284,22 +285,36 @@ def st_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     day1 = ev.where(F.to_date("ts") == F.lit("2024-01-01").cast("date")).select(
         "event_id", "ts", "user_id", "value"
     )
-    root = tempfile.mkdtemp(prefix="st_jdbc_")
-    drop = f"{root}/drop"
-    day1.coalesce(1).write.json(drop)
-    url = f"jdbc:derby:{root}/db;create=true"
-    stream = spark.readStream.schema(
-        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE"
-    ).json(drop)
-    for attempt in ("ck1", "ck2"):  # ck2 = fresh checkpoint: full redelivery
-        q = stream_into_jdbc(stream, url, "day1_events",
-                             checkpoint=f"{root}/{attempt}", key="event_id")
-        await_or_raise(q, 120)
-    return read_jdbc(spark, url, "day1_events").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
+    with scratch_dir("st_jdbc_") as root:
+        drop, db = f"{root}/drop", f"{root}/db"
+        day1.coalesce(1).write.json(drop)
+        url = f"jdbc:derby:{db};create=true"
+        stream = spark.readStream.schema(
+            "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE"
+        ).json(drop)
+        try:
+            # ck2 = fresh checkpoint: full redelivery
+            for attempt in ("ck1", "ck2"):
+                q = stream_into_jdbc(stream, url, "day1_events",
+                                     checkpoint=f"{root}/{attempt}",
+                                     key="event_id")
+                await_or_raise(q, 120)
+            return read_jdbc(spark, url, "day1_events").agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.countDistinct("user_id").alias("n_users"),
+                F.round(F.sum("value"), 2).alias("total_value"),
+            ).localCheckpoint(eager=True)
+        finally:
+            # Embedded Derby holds a booted database's files open in the
+            # JVM until it is shut down, and reports a clean shutdown
+            # (SQLState 08006) or a database never created (XJ004) as
+            # an exception.
+            try:
+                spark._jvm.java.sql.DriverManager.getConnection(
+                    f"jdbc:derby:{db};shutdown=true")
+            except Py4JJavaError as e:
+                if e.java_exception.getSQLState() not in ("08006", "XJ004"):
+                    raise
 
 
 @query(

@@ -41,6 +41,7 @@ from busdata_pipeline_spark.operators import (
     similarity,
 )
 from busdata_pipeline_spark.plans.registry import ORACLES, query
+from busdata_pipeline_spark.scratch import scratch_dir
 from busdata_pipeline_spark.sources import table
 
 # ---------------------------------------------------------------------------
@@ -2365,9 +2366,6 @@ def td_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-byte fingerprints + ids; bucket-scoped reads for the anti-join),
     and this loop is exactly how td_dedup_exact becomes an operational
     pipeline."""
-    import shutil
-    import tempfile
-
     from busdata_pipeline_spark.operators.dedup import fingerprint
 
     docs = table(spark, sf_dir, "documents")
@@ -2386,9 +2384,9 @@ def td_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select((F.col("doc_id") + 2000000).alias("doc_id"), "fp")
         )
     )
-    store = tempfile.mkdtemp(prefix="dedup_store_")
-    shutil.rmtree(store, ignore_errors=True)
-    try:
+    with scratch_dir("dedup_store_") as scratch:
+        store = f"{scratch}/store"
+
         def keep_first(df):
             return df.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
 
@@ -2406,8 +2404,6 @@ def td_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
 
 
 @query(

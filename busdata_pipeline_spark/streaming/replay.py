@@ -27,14 +27,14 @@ So with batches [on_time, filler, late, future]:
 which an ANSI-SQL oracle can state exactly.
 
 The replay protocol lives here and nowhere else: ``replay_scratch``
-makes the scratch dir and pins the confs, ``stage_batches`` /
-``staged_stream`` stage one file per micro-batch, ``drain`` (memory
-sink) or ``await_or_raise`` (any other sink) waits for the
-``availableNow`` query with a bound, and the result is materialized
-with ``localCheckpoint(eager=True)`` before the scratch dir, the temp
-view and the confs are released.  A query that does not finish in time
-is stopped and raises ``TimeoutError``; no caller ever reads a
-half-filled sink.
+takes a ``scratch_dir`` (busdata_pipeline_spark/scratch.py) and pins
+the confs, ``stage_batches`` / ``staged_stream`` stage one file per
+micro-batch, ``drain`` (memory sink) or ``await_or_raise`` (any other
+sink) waits for the ``availableNow`` query with a bound, and the
+result is materialized with ``localCheckpoint(eager=True)`` before
+the scratch dir, the temp view and the confs are released.  A query
+that does not finish in time is stopped and raises ``TimeoutError``; no
+caller ever reads a half-filled sink.
 """
 
 
@@ -43,7 +43,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 import uuid
 from contextlib import contextmanager
 from typing import Callable, Iterator
@@ -51,13 +50,15 @@ from typing import Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from busdata_pipeline_spark.scratch import scratch_dir
+
 
 @contextmanager
 def replay_scratch(spark: SparkSession, prefix: str,
                    confs: dict[str, str] | None = None) -> Iterator[str]:
-    """Yield a fresh scratch dir with ``confs`` pinned on the session;
-    on exit restore each conf (unset it if it was unset before) and
-    remove the dir.
+    """Yield a ``scratch_dir`` with ``confs`` pinned on the session; on
+    exit restore each conf (unset it if it was unset before), then the
+    dir goes.
 
     ``spark.sql.shuffle.partitions`` is always pinned to 8: the
     state-store partition count is fixed per checkpoint at first run,
@@ -66,18 +67,17 @@ def replay_scratch(spark: SparkSession, prefix: str,
     checkpoint, so it can pin a small count and restore afterwards."""
     pinned = {"spark.sql.shuffle.partitions": "8", **(confs or {})}
     prev = {k: spark.conf.get(k, None) for k in pinned}
-    scratch = tempfile.mkdtemp(prefix=prefix)
-    try:
-        for k, v in pinned.items():
-            spark.conf.set(k, v)
-        yield scratch
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
+    with scratch_dir(prefix) as scratch:
+        try:
+            for k, v in pinned.items():
                 spark.conf.set(k, v)
-        shutil.rmtree(scratch, ignore_errors=True)
+            yield scratch
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def stage_batches(batches: list[DataFrame], stream_dir: str,

@@ -119,7 +119,6 @@ def ensure_protobuf_runtime(spark=None) -> str:
     import importlib
     import os
     import sys
-    import tempfile
     import zipfile
 
     shim = os.path.join(
@@ -160,10 +159,10 @@ def ensure_protobuf_runtime(spark=None) -> str:
                 shim + (os.pathsep + existing if existing else "")
             )
         if not getattr(sc, "_protoshim_shipped", False):
-            zpath = os.path.join(
-                tempfile.gettempdir(),
-                f"protoshim-google-{os.getpid()}.zip",
-            )
+            # ``_temp_dir`` (private to PySpark) is this context's own
+            # dir under spark.local.dir, deleted at JVM shutdown.  The
+            # zip must outlive this call: executors fetch it lazily.
+            zpath = os.path.join(sc._temp_dir, "protoshim-google.zip")
             with zipfile.ZipFile(zpath, "w") as zf:
                 for root, _dirs, files in os.walk(os.path.join(shim,
                                                                "google")):

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 import pytest
 
@@ -32,6 +33,18 @@ def con():
     c = duckdb_con(SF001)
     yield c
     c.close()
+
+
+@pytest.fixture(autouse=True)
+def no_scratch_left(tmp_path, monkeypatch):
+    """Point Python's temp dir at an empty per-test dir and fail if
+    anything is left in it afterwards: a query that round-trips through
+    storage must remove its scratch before it returns, so every parity
+    run checks cleanup too."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    yield
+    left = os.listdir(tmp_path)
+    assert not left, f"scratch left behind: {left}"
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))

@@ -313,3 +313,19 @@ def test_ensure_runtime_wires_workers_even_when_shim_preimported(spark):
     assert got == "shim"
     pp = spark.sparkContext.environment.get("PYTHONPATH", "")
     assert any("protoshim" in part for part in pp.split(os.pathsep)), pp
+
+
+def test_shipped_shim_zip_lives_in_the_context_temp_dir(spark):
+    """The zip shipped to workers goes to the SparkContext's own temp
+    dir, which is deleted with the JVM, not to the system temp dir,
+    where one zip per process used to pile up."""
+    import glob
+    import os
+    import tempfile
+
+    if ensure_protobuf_runtime(spark) == "protobuf":
+        pytest.skip("real protobuf installed; no shim zip is shipped")
+    sc = spark.sparkContext
+    assert glob.glob(os.path.join(sc._temp_dir, "protoshim-google*.zip"))
+    assert not glob.glob(os.path.join(
+        tempfile.gettempdir(), f"protoshim-google-{os.getpid()}.zip"))
